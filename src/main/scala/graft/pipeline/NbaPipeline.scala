@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.plans.Pin
+
 /** End-to-end pipeline mirroring the reference DAG (E1 in SURVEY.md §3):
   * bronze JSON fixtures → silver all-string tables → six gold models →
   * dbt-equivalent assertions. One SparkSession program replaces the
@@ -30,24 +32,28 @@ final case class NbaPipeline(
     }
 
   /** Seven silver tables (dags/spurs_historic_games.py:427-435), all
-    * columns StringType. */
+    * columns StringType. Each bronze file is parsed and normalized once
+    * and pinned (`graft.plans.Pin`, posture `spark.graft.pin`), the way
+    * the reference loads silver into Postgres once: every gold model,
+    * write and check reads the pinned copy, never the bronze JSON. */
   lazy val silver: Map[String, DataFrame] = Map(
-    "teams" -> SilverNormalize.normalize(bronze("teams")),
-    "players" -> SilverNormalize.normalize(bronze("players")),
-    "games" -> SilverNormalize.normalize(bronze("games")),
-    "player_stats" -> SilverNormalize.normalize(bronze("player_stats_by_game")),
-    "salaries" -> SilverNormalize.normalize(bronze("salaries")),
-    "free_agents" -> SilverNormalize.normalize(bronze("free_agents")),
-    "injuries" -> SilverNormalize.normalize(bronze("injuries"))
-  )
+    "teams" -> "teams",
+    "players" -> "players",
+    "games" -> "games",
+    "player_stats" -> "player_stats_by_game",
+    "salaries" -> "salaries",
+    "free_agents" -> "free_agents",
+    "injuries" -> "injuries"
+  ).map { case (name, file) => name -> Pin.pin(SilverNormalize.normalize(bronze(file))) }
 
-  /** Six gold tables in dependency order; `players_recommendations`
-    * consumes `team_weaknesses_unpivoted` (the one model-on-model edge,
+  /** Six gold tables, each built once from pinned silver and pinned (one
+    * CTAS per dbt model); `writeGold`, `saveAsTables` and `assertGold`
+    * all read these copies. `players_recommendations` consumes the
+    * pinned `team_weaknesses_unpivoted` (the one model-on-model edge,
     * dbt/target/graph_summary.json). */
   lazy val gold: Map[String, DataFrame] = {
-    val twu = GoldModels.teamWeaknessesUnpivoted(silver("games"), silver("teams"))
+    val twu = Pin.pin(GoldModels.teamWeaknessesUnpivoted(silver("games"), silver("teams")))
     Map(
-      "team_weaknesses_unpivoted" -> twu,
       "summary_by_season" -> GoldModels.summaryBySeason(silver("games"), silver("teams")),
       "home_vs_away" -> GoldModels.homeVsAway(silver("games"), silver("teams")),
       "spurs_player_contributions_unpivoted" ->
@@ -56,7 +62,8 @@ final case class NbaPipeline(
       "players_recommendations" -> GoldModels.playersRecommendations(
         twu, silver("players"), silver("player_stats"),
         silver("free_agents"), silver("injuries"), silver("salaries"))
-    )
+    ).map { case (name, df) => name -> Pin.pin(df) } +
+      ("team_weaknesses_unpivoted" -> twu)
   }
 
   /** Materialize gold as parquet (the CTAS-and-swap analog, S11: Spark's

@@ -8,8 +8,9 @@ import org.apache.spark.storage.StorageLevel
   * Iterative operators (connected components, PageRank/HITS/label-prop,
   * BPE training, g05's shared base) and the streaming registries pin
   * intermediate frames so each round/batch reads a materialized result
-  * instead of re-deriving an ever-growing lineage. The default
-  * mechanism, `localCheckpoint(eager = true)`, is the right call in a
+  * instead of re-deriving an ever-growing lineage; `NbaPipeline` pins
+  * its silver and gold layers so each is computed once per refresh.
+  * The default mechanism, `localCheckpoint(eager = true)`, is the right call in a
   * single-JVM deployment (this container, any local[] run): it
   * truncates lineage at executor-memory speed with zero external
   * storage. Its honest cost — the scaladoc at the call sites has always
@@ -34,8 +35,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * All three materialize the same rows at the same plan point, so
   * results are bit-identical across postures (PinSpec pins g05, a
-  * graph fixed-point, and BPE training under `local` vs `eager`, and
-  * `reliable` on a temp dir).
+  * graph fixed-point, BPE training and the fixture pipeline's gold
+  * under `local` vs `eager`, and `reliable` on a temp dir).
   */
 object Pin {
 

@@ -1,6 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
@@ -132,6 +134,40 @@ class NbaPipelineSpec extends AnyFunSuite {
 
   test("dbt schema assertions: all 12 green") {
     assert(pipe.assertGold() === Seq.empty)
+  }
+
+  test("dbt schema assertions: red checks and a missing table, exact messages") {
+    import spark.implicits._
+    val gold = Map(
+      "team_weaknesses_unpivoted" -> Seq[(String, String, String)](
+        ("2024-25", "Rebotes", "Debilidad"),
+        (null, "Robos", "Fortaleza"),
+        (null, "Bloqueos", null)) // a null resultado passes accepted_values
+        .toDF("season2", "weakness_type", "resultado"),
+      "summary_by_season" -> Seq(("2024-25", 1)).toDF("season", "team_ranking"),
+      "spurs_player_contributions_unpivoted" -> Seq(("101", "Player 101", "Robos"))
+        .toDF("player_id", "player_name", "rubro"),
+      "home_vs_away" -> Seq("Home", "Away", "Neutral", "Neutral", null).toDF("location"))
+    assert(Assertions.runAll(gold) === Seq(
+      "team_weaknesses_unpivoted.season2: 2 null rows",
+      "players_recommendations: missing from gold",
+      "home_vs_away.location: 2 rows outside List(Home, Away)"))
+  }
+
+  test("read once: gold and the check aggregates scan no bronze JSON") {
+    def jsonScans(df: DataFrame): Int = df.queryExecution.optimizedPlan.collectWithSubqueries {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _)
+          if r.fileFormat.isInstanceOf[JsonFileFormat] => r
+    }.size
+    // the check itself sees a bronze read
+    val bronze = spark.read.option("multiLine", value = true)
+      .json(getClass.getResource("/nba/games.json").getPath)
+    assert(jsonScans(bronze) === 1)
+    assert(pipe.silver.size === 7)
+    pipe.gold.foreach { case (name, df) => assert(jsonScans(df) === 0, name) }
+    val aggs = Assertions.aggregates(pipe.gold)
+    assert(aggs.map(_._1).toSet === pipe.gold.keySet - "streaks_and_rivals")
+    aggs.foreach { case (name, df) => assert(jsonScans(df) === 0, name) }
   }
 
   test("dbt unique / relationships semantics") {

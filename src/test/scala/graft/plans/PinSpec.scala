@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TrainingData
+import graft.pipeline.NbaPipeline
 import graft.sources.Tables
 
 /** The pin-posture switch (`spark.graft.pin`) must change ONLY the
@@ -11,7 +12,8 @@ import graft.sources.Tables
   * the same rows at the same plan points. Pinned over the three
   * operator families the VERDICT names as localCheckpoint-reliant —
   * g05's shared base (gold chain), a graph fixed-point (PageRank), and
-  * BPE training — plus `reliable` exercised end-to-end on a temp
+  * BPE training, and over the medallion pipeline's silver and gold —
+  * plus `reliable` exercised end-to-end on a temp
   * checkpoint dir, and the invalid-value error path. */
 class PinSpec extends AnyFunSuite {
 
@@ -42,6 +44,18 @@ class PinSpec extends AnyFunSuite {
       assert(eager === base, s"$name differs under spark.graft.pin=eager")
       assert(base.nonEmpty)
     }
+    // the medallion pipeline pins silver and every gold model
+    val fixtures = getClass.getResource("/nba").getPath
+    def gold(pipe: NbaPipeline): Map[String, Seq[String]] =
+      pipe.gold.map { case (n, df) => n -> df.collect().map(_.toString).sorted.toSeq }
+    val base = gold(NbaPipeline(spark, fixtures))
+    val eager = withPin("eager") {
+      val pipe = NbaPipeline(spark, fixtures)
+      try gold(pipe)
+      finally (pipe.silver.values ++ pipe.gold.values).foreach(_.unpersist())
+    }
+    assert(base.size === 6 && base.values.forall(_.nonEmpty))
+    assert(eager === base, "pipeline gold differs under spark.graft.pin=eager")
   }
 
   test("eager posture is bit-identical on the Learn family (NB, NB-capped, perceptron)") {
